@@ -10,7 +10,9 @@ distributed:
 1. range-repartition by the key (global sort order across partitions),
 2. sort within partitions,
 3. count rows per partition (cheap agg),
-4. cumulative offsets broadcast to a ``mapInPandas`` that numbers rows.
+4. cumulative per-partition offsets, added in the JVM to each row's
+   position within its partition (``monotonically_increasing_id``
+   minus the partition bits) — the rows never reach a Python worker.
 
 Equality with the single-task ``row_number`` oracle is asserted in
 ``tests/test_corpus.py`` at small SF.
@@ -18,7 +20,6 @@ Equality with the single-task ``row_number`` oracle is asserted in
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,32 +50,21 @@ def assign_doc_ids(
         .orderBy("_pid")
         .collect()
     )
-    offsets: dict[int, int] = {}
+    offsets = [0] * (max((r["_pid"] for r in counts), default=0) + 1)
     acc = 0
     for row in counts:
         offsets[row["_pid"]] = acc
         acc += row["count"]
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in parted.schema.fields
-    ) + ", doc_id bigint"
-
-    def number(pdf_iter):
-        # one mapInPandas group per partition would be ideal, but batches
-        # can split a partition; re-derive position from a running counter
-        # seeded by the partition offset (TaskContext gives partition id).
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        pos = offsets[pid]
-        for pdf in pdf_iter:
-            ids = pd.RangeIndex(pos + 1, pos + 1 + len(pdf))
-            pos += len(pdf)
-            pdf = pdf.copy()
-            pdf["doc_id"] = ids.astype("int64")
-            yield pdf
-
-    return parted.mapInPandas(number, out_schema)
+    # numbered in the JVM: monotonically_increasing_id is (partition id
+    # << 33) + the row's position in its partition, so subtracting the
+    # high bits leaves the position — no Python worker sees the rows
+    pid = F.spark_partition_id()
+    pos = F.monotonically_increasing_id() - F.shiftleft(
+        pid.cast("bigint"), 33)
+    start = F.element_at(F.array(*[F.lit(o) for o in offsets]), pid + 1)
+    return parted.withColumn(
+        "doc_id", (start.cast("bigint") + pos + 1).cast("bigint"))
 
 
 def doc_ids_oracle(df: DataFrame, key_cols=("repo", "path", "commit")) -> DataFrame:

@@ -38,7 +38,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -531,21 +531,83 @@ def term_bucket(col, n_buckets: int = N_TERM_BUCKETS):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
+#: on-disk schema of the term stats table (one row per term; the
+#: segmented index keeps one row per (term, segment))
+TERM_STATS_SCHEMA = "term string, df bigint, ttf bigint"
+
+
 @dataclass
 class PhysicalIndex:
+    """Query surface over a built index directory.
+
+    **Reader state per generation**: everything a query needs besides
+    the candidate blocks themselves — the parquet listings of
+    ``blocks/`` and the stats tables, the corpus stats, and the term
+    stats already probed — is built once per index *generation*
+    (:meth:`generation`) and reused by every query until the generation
+    changes.  Tables are read with their known schema, so opening one
+    runs no schema-inference job.  Tombstones are cached the same way,
+    keyed by the ``deletes/`` listing (``index/deletes.deleted_array``).
+    """
+
     path: str
     spark: SparkSession
+    _cache: dict = field(default_factory=dict, init=False, repr=False,
+                         compare=False)
+
+    #: hive partition columns of ``blocks/``, after the data columns
+    BLOCK_PARTITIONS = "tb int"
+
+    def generation(self):
+        """Identity of the segment set queries read.  A built index is
+        one immutable segment; rewriting it in place rewrites
+        ``corpus_stats.json``, so its mtime is the key (one ``stat``)."""
+        try:
+            return os.stat(f"{self.path}/corpus_stats.json").st_mtime_ns
+        except OSError:
+            return None
+
+    def cached(self, slot: str, key, build):
+        """``build()``, memoized on this reader under ``slot`` until
+        ``key`` changes."""
+        hit = self._cache.get(slot)
+        if hit is None or hit[0] != key:
+            hit = self._cache[slot] = (key, build())
+        return hit[1]
+
+    def _table(self, name: str, schema: str) -> DataFrame:
+        """``<path>/<name>`` read with its known schema, listed once per
+        generation."""
+        return self.cached(
+            f"table:{name}", self.generation(),
+            lambda: self.spark.read.schema(schema)
+            .parquet(f"{self.path}/{name}"))
 
     @property
     def blocks(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/blocks")
+        cs = self.corpus_stats
+        schema = (
+            BLOCK_SCHEMA_POS_OFF if cs.get("has_offsets")
+            else BLOCK_SCHEMA_POS if cs.get("has_positions")
+            else BLOCK_SCHEMA
+        )
+        return self._table("blocks", f"{schema}, {self.BLOCK_PARTITIONS}")
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/term_stats")
+        return self._table("term_stats", TERM_STATS_SCHEMA)
+
+    def _term_stat_rows(self) -> DataFrame:
+        """The rows the term-stats probe reads; a term's ``df`` is the
+        sum of its rows' (one row per term here)."""
+        return self.term_stats
 
     @property
     def corpus_stats(self) -> dict:
+        return dict(self.cached("corpus_stats", self.generation(),
+                                self._read_corpus_stats))
+
+    def _read_corpus_stats(self) -> dict:
         with open(f"{self.path}/corpus_stats.json") as f:
             return json.load(f)
 
@@ -560,26 +622,33 @@ class PhysicalIndex:
     def term_stats_for(
         self, terms: list[str], n_buckets: int = N_TERM_BUCKETS,
     ) -> dict:
-        """{term: (df, tb)} for query terms, with a per-index cache —
-        ``(None, None)`` for vocabulary misses (negative-cached too).
+        """{term: (df, tb)} for query terms, with a per-generation cache
+        — ``(None, None)`` for vocabulary misses (negative-cached too).
 
         Term stats are immutable for an index generation (tombstone
         deletes don't rewrite df, matching Lucene-until-merge
         semantics), so repeated query terms never re-probe: a query
         batch whose terms were all seen before costs ZERO stats jobs —
         the working set of query terms is tiny next to the vocabulary,
-        which is why this is a cache and not a preload."""
-        caches = self.__dict__.setdefault("_term_stats_cache", {})
+        which is why this is a cache and not a preload.  A new
+        generation (e.g. a streaming refresh adding a segment) starts
+        an empty cache, so a term probed before it is probed again.
+
+        A probe is ONE job with no shuffle: the ``isin`` filter reaches
+        the parquet scan, and per-segment ``df`` rows are summed here
+        on the driver (a handful of rows per query term)."""
+        caches = self.cached("term_stats_for", self.generation(), dict)
         cache = caches.setdefault(n_buckets, {})  # tb depends on n_buckets
         missing = sorted(t for t in set(terms) if t not in cache)
         if missing:
             pdf = (
-                self.term_stats.where(F.col("term").isin(missing))
+                self._term_stat_rows().where(F.col("term").isin(missing))
                 .select("term", "df",
                         term_bucket(F.col("term"), n_buckets).alias("tb"))
                 .toPandas()
+                .groupby("term").agg(df=("df", "sum"), tb=("tb", "first"))
             )
-            found = dict(zip(pdf["term"],
+            found = dict(zip(pdf.index,
                              zip(pdf["df"].astype(int),
                                  pdf["tb"].astype(int))))
             for t in missing:

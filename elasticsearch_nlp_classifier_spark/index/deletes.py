@@ -30,6 +30,7 @@ import time
 from typing import Iterable
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,43 +56,80 @@ def _deletes_dir(index: PhysicalIndex) -> str:
     return f"{index.path}/deletes"
 
 
-def deleted_count_upper_bound(index: PhysicalIndex) -> int:
-    """Cheap (no Spark job) upper bound on the tombstone count: the sum
-    of parquet-footer row counts over the CURRENT ``deletes/`` files —
-    metadata-only, no scan (same mechanism as ``pit.pit_deleted_array``).
-    An over-estimate when ids repeat across batches — safe direction for
-    a driver-memory guard — but, unlike the old monotone lineage-log
-    sum, it reconciles with the live file set: files removed by
-    compaction/cleanup stop counting, so a long-lived index is not
-    permanently demoted off the fast driver-array tombstone path."""
-    import pyarrow.parquet as pq
-
+def _tombstone_files(index: PhysicalIndex) -> tuple[str, ...]:
+    """The CURRENT ``deletes/`` parquet files — one ``os.listdir``, and
+    the key of every per-index tombstone cache (appends always add
+    new files; files are never rewritten in place)."""
     d = _deletes_dir(index)
     try:
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        names = sorted(os.listdir(d))
     except OSError:
-        return 0
+        return ()
+    return tuple(f"{d}/{f}" for f in names if f.endswith(".parquet"))
+
+
+def tombstone_rows(files) -> int:
+    """Sum of parquet-footer row counts over ``files`` — metadata-only,
+    no scan.  An over-estimate of the distinct ids when ids repeat
+    across batches: the safe direction for a driver-memory guard.  A
+    file racing with cleanup no longer counts."""
+    import pyarrow.parquet as pq
+
     total = 0
     for f in files:
         try:
-            total += pq.ParquetFile(f"{d}/{f}").metadata.num_rows
+            total += pq.ParquetFile(f).metadata.num_rows
         except OSError:
-            continue  # file racing with cleanup — it no longer counts
+            continue
     return total
+
+
+def read_tombstones(files) -> np.ndarray:
+    """Sorted unique doc ids in the tombstone parquet ``files``, read on
+    the driver with pyarrow — no Spark job.  Callers bound the size
+    first with :func:`tombstone_rows`.  The array is read-only:
+    ``deleted_array`` shares it between queries."""
+    import pyarrow.parquet as pq
+
+    cols = [pq.read_table(f, columns=["doc_id"]).column("doc_id")
+            .drop_null().to_numpy().astype(np.int64) for f in files]
+    arr = (np.unique(np.concatenate(cols)) if cols
+           else np.empty(0, dtype=np.int64))
+    arr.flags.writeable = False
+    return arr
+
+
+def deleted_count_upper_bound(index: PhysicalIndex) -> int:
+    """Cheap (no Spark job) upper bound on the tombstone count: the sum
+    of parquet-footer row counts over the CURRENT ``deletes/`` files
+    (:func:`tombstone_rows`), cached per ``deletes/`` listing.  Unlike
+    a monotone lineage-log sum, it reconciles with the live file set:
+    files removed by compaction/cleanup stop counting, so a long-lived
+    index is not permanently demoted off the fast driver-array
+    tombstone path."""
+    files = _tombstone_files(index)
+    return index.cached("tombstone_rows", files,
+                        lambda: tombstone_rows(files))
 
 
 def delete_docs(
     index: PhysicalIndex, ids: "DataFrame | Iterable[int]"
 ) -> int:
     """Tombstone documents by id.  Appends to the deletes side table;
-    returns how many ids were written (pre-dedup — reads dedup)."""
+    returns how many ids were written (pre-dedup — reads dedup).
+
+    An id list becomes a local relation (built from pandas — no Python
+    RDD), so the append is one write job of one file and its count is
+    ``len``."""
     spark = index.spark
     if isinstance(ids, DataFrame):
         df = ids.select(F.col(ids.columns[0]).cast("bigint").alias("doc_id"))
+        n = df.count()
     else:
-        rows = [(int(i),) for i in ids]
-        df = spark.createDataFrame(rows, "doc_id bigint")
-    n = df.count()
+        arr = np.fromiter((int(i) for i in ids), dtype=np.int64)
+        df = spark.createDataFrame(pd.DataFrame({"doc_id": arr}),
+                                   "doc_id bigint").coalesce(1)
+        n = len(arr)
     df.write.mode("append").parquet(_deletes_dir(index))
     _log_lineage(index, n)
     return n
@@ -107,12 +145,11 @@ def _log_lineage(index: PhysicalIndex, n: int) -> None:
 
 def deleted_df(index: PhysicalIndex) -> DataFrame | None:
     """Distinct tombstoned ids as a DataFrame, or None if no deletes."""
-    d = _deletes_dir(index)
-    if not os.path.isdir(d) or not any(
-        f.endswith(".parquet") for f in os.listdir(d)
-    ):
+    files = _tombstone_files(index)
+    if not files:
         return None
-    return index.spark.read.parquet(d).select("doc_id").distinct()
+    return (index.spark.read.schema("doc_id bigint")
+            .parquet(_deletes_dir(index)).select("doc_id").distinct())
 
 
 def deleted_array(
@@ -121,9 +158,12 @@ def deleted_array(
 ) -> np.ndarray:
     """Sorted unique tombstoned doc ids (driver-side numpy array).
 
-    Deliberately a collect: the tombstone set is side-table small (see
-    module docstring); it rides to scoring tasks in the closure.
-    GUARDED: when the (cheap, no-job) lineage upper bound exceeds
+    Read on the driver with pyarrow from the ``deletes/`` files (no
+    Spark job) and cached per ``deletes/`` listing, so queries between
+    two deletes re-read nothing; the array rides to scoring tasks in
+    the closure (see module docstring).  The returned array is shared
+    by those queries: it is read-only.
+    GUARDED: when the (cheap, no-job) footer upper bound exceeds
     ``max_driver_rows``, raises :class:`TombstoneOverflowError` instead
     of materializing O(deleted) driver memory — callers fall back to
     the ``deleted_df`` anti-join path (query modules do so
@@ -137,11 +177,8 @@ def deleted_array(
             "driver-closure cap — use deleted_df() / the anti-join "
             "query path, or compact()"
         )
-    df = deleted_df(index)
-    if df is None:
-        return np.empty(0, dtype=np.int64)
-    pdf = df.toPandas()
-    return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    files = _tombstone_files(index)
+    return index.cached("tombstones", files, lambda: read_tombstones(files))
 
 
 def mask_deleted(docs: np.ndarray, deleted: np.ndarray) -> np.ndarray:

@@ -68,29 +68,26 @@ def pit_deleted_array(
 ) -> np.ndarray:
     """Sorted unique tombstoned ids AS OF the PIT — reads only the
     frozen file list, so appends after ``open_pit`` are invisible.
-    GUARDED like ``deletes.deleted_array``: the parquet-footer row
-    count (metadata-only, no scan) bounds the collect; above the cap
-    this raises ``TombstoneOverflowError`` and callers use the
+    Read on the driver with pyarrow, like ``deletes.deleted_array``,
+    and GUARDED the same way: the parquet-footer row count
+    (metadata-only, no scan) bounds the read; above the cap this
+    raises ``TombstoneOverflowError`` and callers use the
     ``pit_deleted_df`` anti-join path."""
-    from .deletes import TOMBSTONE_DRIVER_CAP, TombstoneOverflowError
+    from .deletes import (
+        TOMBSTONE_DRIVER_CAP, TombstoneOverflowError, read_tombstones,
+        tombstone_rows,
+    )
 
     if max_driver_rows is None:
         max_driver_rows = TOMBSTONE_DRIVER_CAP
-    if not pit.delete_files:
-        return np.empty(0, dtype=np.int64)
-    import pyarrow.parquet as pq
-
-    ub = sum(pq.ParquetFile(f).metadata.num_rows
-             for f in pit.delete_files)
+    ub = tombstone_rows(pit.delete_files)
     if ub > max_driver_rows:
         raise TombstoneOverflowError(
             f"~{ub} PIT tombstoned ids exceed the {max_driver_rows}-row "
             "driver-closure cap — use pit_deleted_df() / the anti-join "
             "query path"
         )
-    df = pit.index.spark.read.parquet(*pit.delete_files)
-    pdf = df.select("doc_id").distinct().toPandas()
-    return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    return read_tombstones(pit.delete_files)
 
 
 def pit_deleted_df(pit: PointInTime) -> DataFrame | None:

@@ -270,8 +270,9 @@ def profile_search(
     term-stats probe, candidate-block count, score+rank — with
     wall-clock millis and the per-term df/idf the scorer used.
 
-    Phase semantics mirror the engine's two-job query shape
-    (`query/wand.py:wand_topk`): ``stats_probe_ms`` is ~0 when the
+    Phase semantics mirror the engine's query shape
+    (`query/wand.py:wand_topk`): one term-stats probe job, then the
+    scoring job(s).  ``stats_probe_ms`` is ~0 when the
     term-stats cache is warm for this index generation (warm batches
     skip the probe job entirely); ``candidate_blocks`` adds one
     metadata-count job the plain search never runs — profiling has

@@ -251,9 +251,14 @@ def wand_topk(
     Query latency shape: the query *batch* is tiny, so its analysis
     runs driver-side with the identical ``Analyzer`` chain the index
     UDFs wrap (parity-tested), and term stats come from ONE pushed-down
-    ``isin`` probe of the (small) term_stats table.  The only other
-    Spark job is the pruned block scan + per-query scoring — two jobs
-    total per batch, regardless of query count.
+    ``isin`` probe of the (small) term_stats table — skipped when every
+    term was probed before in this index generation.  Tombstones are
+    read on the driver without a job (``index/deletes.deleted_array``).
+    The rest is the broadcast of the (query, term) rows and the pruned
+    block scan + per-query scoring: one scoring job for a single
+    query, which needs no exchange, and a shuffle plus the final
+    sort's jobs for a multi-query batch — a fixed count regardless of
+    query count.
     """
     from ..analyzer.chain import get_analyzer
 
@@ -427,9 +432,13 @@ def topk_from_pairs(
     n_queries = len({r["query_id"] for r in q_rows})
     nparts = max(1, min(n_queries,
                         2 * index.spark.sparkContext.defaultParallelism))
+    # a batch that needs one scoring partition (a single query) skips
+    # the exchange: the pruned scan feeds the scorer in one task, and
+    # the final orderBy becomes a local sort of that one partition
+    cand = (cand.coalesce(1) if nparts == 1
+            else cand.repartition(nparts, "query_id"))
     out = (
-        cand.repartition(nparts, "query_id")
-        .sortWithinPartitions("query_id", "term", "first_doc")
+        cand.sortWithinPartitions("query_id", "term", "first_doc")
         .mapInArrow(
             partial(_score_partition, avgdl=avgdl, doc_count=doc_count,
                     deleted=deleted),

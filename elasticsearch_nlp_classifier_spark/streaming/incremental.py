@@ -33,7 +33,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.blocks import PhysicalIndex, encode_blocks, term_bucket
+from ..index.blocks import (
+    TERM_STATS_SCHEMA, PhysicalIndex, encode_blocks, term_bucket,
+)
 from ..index.build import build_logical_index
 
 CORPUS_SCHEMA = (
@@ -42,21 +44,34 @@ CORPUS_SCHEMA = (
 
 
 class StreamingPhysicalIndex(PhysicalIndex):
-    """Query surface over a segmented (streaming-built) index."""
+    """Query surface over a segmented (streaming-built) index.  A
+    generation is one set of completed segments: a segment's stats JSON
+    is written last, after its blocks and term stats."""
 
-    @property
-    def blocks(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/blocks")
+    BLOCK_PARTITIONS = "segment int, tb int"
+
+    def generation(self):
+        """The ``seg_stats/`` listing, with each file's mtime: a
+        replayed micro-batch rewrites its segment in place, which must
+        start a new generation too."""
+        try:
+            with os.scandir(f"{self.path}/seg_stats") as it:
+                return tuple(sorted(
+                    (e.name, e.stat().st_mtime_ns) for e in it))
+        except OSError:
+            return ()
+
+    def _term_stat_rows(self) -> DataFrame:
+        return self._table("seg_term_stats",
+                           f"{TERM_STATS_SCHEMA}, segment int")
 
     @property
     def term_stats(self) -> DataFrame:
-        seg = self.spark.read.parquet(f"{self.path}/seg_term_stats")
-        return seg.groupBy("term").agg(
+        return self._term_stat_rows().groupBy("term").agg(
             F.sum("df").alias("df"), F.sum("ttf").alias("ttf")
         )
 
-    @property
-    def corpus_stats(self) -> dict:
+    def _read_corpus_stats(self) -> dict:
         segs_dir = f"{self.path}/seg_stats"
         doc_count = sum_ttf = sum_doc_freq = 0
         for fn in sorted(os.listdir(segs_dir)):

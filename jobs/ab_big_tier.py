@@ -144,8 +144,10 @@ def main() -> None:
         rounds.append(rec)
         print(json.dumps(rec))
 
-    valid = [r for r in rounds if r["valid"]] or rounds
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
+    valid = [r for r in rounds if r["valid"]]
+    # no round passed the stability gate: no verdict (null medians),
+    # never one derived from gate-failed rounds
+    med = lambda xs: sorted(xs)[len(xs) // 2] if xs else None  # noqa: E731
     out = {
         "protocol": "ABAB interleaved --one-level, min-of-3 builds / "
                     "min-of-3 WAND batches per arm, bw-probe gated",
@@ -157,7 +159,8 @@ def main() -> None:
             ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True).stdout.strip(),
         "rounds": rounds,
-        "n_valid": len([r for r in rounds if r["valid"]]),
+        "n_valid": len(valid),
+        "invalid_window": not valid,
         "median_build_ratio": med(
             [r["build_ratio_head_over_r3"] for r in valid]),
         "median_wand_ratio": med(
@@ -167,7 +170,8 @@ def main() -> None:
     with open(os.path.join(REPO, "BENCH", "ab_big_tier.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({k: out[k] for k in (
-        "n_valid", "median_build_ratio", "median_wand_ratio")}))
+        "n_valid", "invalid_window", "median_build_ratio",
+        "median_wand_ratio")}))
 
 
 if __name__ == "__main__":

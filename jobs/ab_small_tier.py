@@ -93,8 +93,10 @@ def main() -> None:
         rounds.append(rec)
         print(json.dumps(rec))
 
-    valid = [r for r in rounds if r["valid"]] or rounds
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
+    valid = [r for r in rounds if r["valid"]]
+    # no round passed the stability gate: no verdict (null medians),
+    # never one derived from gate-failed rounds
+    med = lambda xs: sorted(xs)[len(xs) // 2] if xs else None  # noqa: E731
     out = {
         "protocol": "ABBA interleaved full bench.py (big tier off), "
                     "min-of-reps per arm, bw-probe gated",
@@ -105,7 +107,8 @@ def main() -> None:
             ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True).stdout.strip(),
         "rounds": rounds,
-        "n_valid": len([r for r in rounds if r["valid"]]),
+        "n_valid": len(valid),
+        "invalid_window": not valid,
         "median_min_ratios": {
             q: med([r["min_ratios"][q] for r in valid])
             for q in QUERIES},
@@ -115,6 +118,7 @@ def main() -> None:
               "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({"n_valid": out["n_valid"],
+                      "invalid_window": out["invalid_window"],
                       "median_min_ratios": out["median_min_ratios"]}))
 
 
